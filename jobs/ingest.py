@@ -1,5 +1,8 @@
-"""spark-submit entry point (BASELINE.md scaling protocol):
+"""spark-submit entry point (BASELINE.md scaling protocol). Build the
+engine package from the source first (dist/ is not committed):
 
+  python -c "import sys; sys.path.insert(0, 'tools'); \\
+      import bench_scaling; bench_scaling.build_zip()"
   spark-submit --master local[8] --py-files dist/engine.zip jobs/ingest.py \\
       --input /tmp/mfdedup_bench/images_50000.parquet --mode dedup \\
       --out /tmp/bench/run8
@@ -8,7 +11,7 @@ Modes:
   signatures  — signature stage + exact-fp classification only (the
                 UDF-dominated ingest hot path)
   dedup       — full near-dup pipeline (signatures → LSH → verify →
-                caption SA → connected components)
+                caption → connected components)
   ingest      — versioned NDF ingest into --warehouse (full reference
                 --task=write semantics)
 
@@ -108,7 +111,7 @@ def main() -> None:
 
     def run_dedup(df) -> None:
         """Timed e2e: ONE action forces the whole DAG, so independent
-        branches (signature LSH vs caption suffix-array) run concurrently
+        branches (signature LSH vs caption matching) run concurrently
         — no instrumentation barriers in the measured pass."""
         from mfdedup_spark.plans.pipeline import dedup_images
 
@@ -151,7 +154,7 @@ def main() -> None:
         cpairs, _ = caption_pairs(df, sig_cfg)
         cpairs = cpairs.persist()
         cpairs.count()
-        t = mark("caption_sa", t)
+        t = mark("caption", t)
         edges = (
             verified.select("image_id_a", "image_id_b")
             .unionByName(cpairs.select("image_id_a", "image_id_b"))

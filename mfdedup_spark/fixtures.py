@@ -10,7 +10,7 @@ Planted structure (ground truth returned alongside):
 - ~60% base images (independent random pixels, no dups)
 - ~15% exact duplicates (byte-identical, new image_id)  → SHA-1 path
 - ~15% near-duplicates (noise / re-encode / 1-col crop) → MinHash/SimHash
-- ~5%  caption-substring dups (distinct pixels)         → suffix-array path
+- ~5%  caption-substring dups (distinct pixels)         → caption matcher
 - ~5%  hot-bucket adversaries (near-constant pixels)    → LSH skew/salting
 """
 

@@ -1,6 +1,5 @@
-"""Caption exact-substring duplicate matching (north_star: "Suffix-array
-substring matching over captions (via applyInPandas per LSH bucket)
-catches exact-substring dup captions that signature hashing misses").
+"""Caption exact-substring duplicate matching: catches captions that are
+exact substrings of one another, which signature hashing misses.
 
 No reference analogue (the reference matches exact chunks only) —
 spec'd in SURVEY.md §2.6.
@@ -15,13 +14,9 @@ Dataflow:
    complete blocking scheme for whole-word-aligned substrings.
 2. Candidate pairs — the same salted/capped anchor-star generator as the
    MinHash LSH path (operators/lsh.anchor_star_pairs).
-3. Verification — per-anchor suffix-array groups: rows are repartitioned
-   by anchor and processed by ``mapInPandas`` with a pandas groupby
-   inside each Arrow batch (same semantics as applyInPandas-per-group,
-   but the per-group Arrow round-trip — milliseconds × #groups — is
-   amortized to one per batch). Each group builds one suffix array over
-   the member captions (core.suffix_array.BucketMatcher) to find members
-   hosting the anchor caption, plus the reverse containment per member.
+3. Verification — JVM-side: captions join back once per pair side and
+   ``contains`` keeps pairs where one caption holds the other
+   (``substring_pairs``, shared with the doc-side queries in textops).
 
 Scale note: gram explosion multiplies caption rows by ≤ (tokens-k+1);
 at 10^12 rows that blocking-key volume is tokens× the corpus, so the
@@ -36,22 +31,11 @@ requires recall ≥ 0.99).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mfdedup_spark.config import SignatureConfig
 from mfdedup_spark.operators.lsh import anchor_star_pairs
-
-PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id_a", T.StringType()),
-        T.StructField("image_id_b", T.StringType()),
-        T.StructField("method", T.StringType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
 
 
 def caption_gram_buckets(
@@ -88,6 +72,33 @@ def caption_gram_buckets(
     )
 
 
+def substring_pairs(
+    pairs: DataFrame, texts: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """Keep the candidate pairs ({id_col}_a, {id_col}_b) whose texts are
+    distinct and one contains the other. The candidates carry ids only;
+    the texts join back once per side, so no text payload rides the
+    candidate shuffle. ``contains`` compares UTF-8 bytes, which on valid
+    UTF-8 is the same as code-point containment (Python ``in``, the
+    oracle's check)."""
+    a, b = f"{id_col}_a", f"{id_col}_b"
+    ta = texts.select(F.col(id_col).alias(a), F.col(text_col).alias("_text_a"))
+    tb = texts.select(F.col(id_col).alias(b), F.col(text_col).alias("_text_b"))
+    return (
+        pairs.join(ta, a)
+        .join(tb, b)
+        # identical texts don't establish a dup by themselves (oracle rule)
+        .where(
+            (F.col("_text_a") != F.col("_text_b"))
+            & (
+                F.contains(F.col("_text_b"), F.col("_text_a"))
+                | F.contains(F.col("_text_a"), F.col("_text_b"))
+            )
+        )
+        .select(a, b)
+    )
+
+
 def caption_pairs(
     images: DataFrame, cfg: SignatureConfig, pin: list | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -101,49 +112,10 @@ def caption_pairs(
     cand, stats = anchor_star_pairs(
         buckets, cfg, key_cols=["bucket"], id_col="image_id", pin=pin
     )
-    caps = images.select("image_id", "caption")
-    joined = (
-        cand.join(
-            caps.select(
-                F.col("image_id").alias("image_id_a"),
-                F.col("caption").alias("caption_a"),
-            ),
-            "image_id_a",
-        )
-        .join(
-            caps.select(
-                F.col("image_id").alias("image_id_b"),
-                F.col("caption").alias("caption_b"),
-            ),
-            "image_id_b",
-        )
-        # identical captions don't establish a dup by themselves (oracle rule)
-        .where(F.col("caption_a") != F.col("caption_b"))
-    )
-
-    def verify_batch(batches):
-        """Anchor groups are co-located by the repartition below; a single
-        pandas groupby per Arrow batch amortizes the per-group overhead
-        that per-group applyInPandas would pay (~ms × #groups)."""
-        from mfdedup_spark.core.suffix_array import BucketMatcher, contains
-
-        cols = [f.name for f in PAIR_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for anchor, group in pdf.groupby("image_id_a", sort=False):
-                cap_a = group["caption_a"].iloc[0]
-                members = group["image_id_b"].tolist()
-                caps_b = group["caption_b"].tolist()
-                # one suffix array over the member captions: which host the
-                # anchor? plus the reverse containment per member
-                m = BucketMatcher(caps_b)
-                hosts = m.hosts_of(cap_a)
-                for i, (mid, cb) in enumerate(zip(members, caps_b)):
-                    if i in hosts or contains(cap_a, cb):
-                        out.append((anchor, mid, "caption", 1.0))
-            yield pd.DataFrame(out, columns=cols)
-
-    verified = joined.repartition("image_id_a").mapInPandas(
-        verify_batch, schema=PAIR_SCHEMA
+    verified = substring_pairs(cand, images, "image_id", "caption").select(
+        "image_id_a",
+        "image_id_b",
+        F.lit("caption").alias("method"),
+        F.lit(1.0).alias("score"),
     )
     return verified, stats

@@ -45,30 +45,8 @@ component — a total order, independent of execution order.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _prefetch(df: DataFrame) -> None:
-    """Materialize a lazily-checkpointed frame on a background thread
-    (guide §2.6: overlap independent jobs). Building the CC fragments
-    costs the driver a second-ish of pure Catalyst planning (localCheckpoint
-    compiles each subtree to an RDD) during which the executors would sit
-    idle; kicking the checkpoint's materialization off first lets the
-    cluster chew the expensive upstream pair subtree while the driver
-    plans. RDD-cache partition locks make the concurrent first action
-    race-free (each partition is computed once); any failure is swallowed
-    here and re-raised by the foreground action that recomputes it."""
-
-    def run() -> None:
-        try:
-            df.count()
-        except Exception:
-            pass
-
-    threading.Thread(target=run, daemon=True).start()
 
 
 def _iterate_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -174,9 +152,6 @@ def connected_components(
         )
         .localCheckpoint(eager=False)
     )
-    # overlap: start computing the (expensive) pair subtree behind this
-    # checkpoint now, while the driver plans the contraction fragments
-    _prefetch(edges)
 
     # stage 1 — star contraction: l1(v) = min({v} ∪ N(v)); feeds both
     # the contracted-edge build and the final composition

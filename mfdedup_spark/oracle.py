@@ -119,15 +119,13 @@ def verify_pairs(
 # ------------------------------------------------------------- caption pairs
 def caption_pairs(images: pd.DataFrame, cfg: SignatureConfig) -> pd.DataFrame:
     """Exact-substring caption dups via word-k-gram blocking + containment
-    check (north_star: suffix-array substring matching the signatures miss).
-    Same blocking rule as operators/caption_match.py."""
-    from mfdedup_spark.core.suffix_array import contains
-
+    check. Same blocking rule as operators/caption_match.py, including its
+    single-space tokenization (``split(" ")``, not ``split()``)."""
     grams: dict[int, list[str]] = defaultdict(list)
     caps = {}
     for r in images.itertuples(index=False):
         caps[r.image_id] = r.caption
-        toks = r.caption.split()
+        toks = r.caption.split(" ")
         k = cfg.caption_gram_k
         seen = set()
         for i in range(max(1, len(toks) - k + 1)):
@@ -150,7 +148,7 @@ def caption_pairs(images: pd.DataFrame, cfg: SignatureConfig) -> pd.DataFrame:
         ca, cb = caps[a], caps[b]
         if ca == cb:
             continue  # identical captions don't establish a dup by themselves
-        if contains(ca, cb) or contains(cb, ca):
+        if ca in cb or cb in ca:
             rows.append((a, b, "caption", 1.0))
     return pd.DataFrame(rows, columns=["image_id_a", "image_id_b", "method", "score"])
 

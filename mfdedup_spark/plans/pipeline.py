@@ -14,7 +14,7 @@ as one Spark job:
        │                 anchor-star pairs
        │                        ▼
        │             verify (JVM zip_with/xor)    (shuffle 2: sig join)
-       └──caption grams──► suffix-array verify    (shuffle 3)
+       └──caption grams──► contains verify        (shuffle 3: caption joins)
                                 ▼
               connected components (iterative)    (shuffles 4..4+k)
                                 ▼
@@ -29,10 +29,7 @@ from pyspark.sql import functions as F
 from mfdedup_spark.config import SignatureConfig
 from mfdedup_spark.functions.signatures import compute_signatures
 from mfdedup_spark.operators.caption_match import caption_pairs
-from mfdedup_spark.operators.connected_components import (
-    _prefetch,
-    connected_components,
-)
+from mfdedup_spark.operators.connected_components import connected_components
 from mfdedup_spark.operators.lsh import candidate_pairs
 from mfdedup_spark.operators.verify import verify_pairs
 
@@ -46,11 +43,6 @@ def dedup_images(
     cfg = cfg or SignatureConfig()
     sig = compute_signatures(images, cfg)
     sig.persist()  # reused by candidate gen + verification joins
-    # overlap (guide §2.6): start the Arrow/Python signature stage now so
-    # decode+hash runs while the driver builds the candidate/caption/CC
-    # fragments (connected_components alone spends ~1 s of pure Catalyst
-    # planning at bench scale); downstream actions find sig cached
-    _prefetch(sig)
 
     cand, lsh_stats = candidate_pairs(sig, cfg)
     verified = verify_pairs(cand, sig, cfg)

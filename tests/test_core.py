@@ -1,4 +1,4 @@
-"""Unit tests for the numpy signature core, codecs and suffix array
+"""Unit tests for the numpy signature core and codecs
 (SURVEY.md §5 item 1: operator-level invariants)."""
 
 import numpy as np
@@ -19,7 +19,6 @@ from mfdedup_spark.core.hashes import (
     simhash_bands,
     splitmix64,
 )
-from mfdedup_spark.core.suffix_array import BucketMatcher, build_suffix_array, contains
 
 CFG = SignatureConfig()
 T = SignatureTables.get(CFG)
@@ -118,27 +117,6 @@ def test_sha1_matches_hashlib_and_gram_hash_portable():
         f"select ('0x' || substr(md5('{g}'),1,15))::bigint"
     ).fetchone()[0]
     assert got == want
-
-
-def test_suffix_array_matches_python_in():
-    rng = np.random.default_rng(5)
-    words = ["ab", "bc", "ca", "abc", "zzz", "q"]
-    for _ in range(30):
-        s = "".join(rng.choice(words, rng.integers(1, 30)))
-        sa = build_suffix_array(s)
-        assert len(sa) == len(s)
-        for _ in range(10):
-            sub = "".join(rng.choice(words, rng.integers(1, 4)))
-            assert contains(s, sub) == (sub in s)
-
-
-def test_bucket_matcher():
-    m = BucketMatcher(["the quick brown fox", "lazy dog sleeps", "brown fox"])
-    assert m.substring_hosts("brown fox")
-    assert m.substring_hosts("lazy dog")
-    assert not m.substring_hosts("purple cow")
-    # needles never match across caption boundaries
-    assert not m.substring_hosts("fox lazy")
 
 
 def test_shingle_methods_properties():

@@ -1,4 +1,4 @@
-"""Tests for the training-data-pipeline extras: multimodal plumbing,
+"""Tests for the training-data-pipeline extras:
 ANN / embedding dedup, text ops, and structured streaming."""
 
 import numpy as np
@@ -6,65 +6,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mfdedup_spark import annops, multimodal, textops
-from mfdedup_spark.core import codecs
+from mfdedup_spark import annops, textops
 from mfdedup_spark.fixtures import generate_images, write_parquet
-
-
-@pytest.fixture(scope="module")
-def images_df(spark, tmp_path_factory):
-    df, _ = generate_images(60, seed=11)
-    p = tmp_path_factory.mktemp("mm") / "images.parquet"
-    write_parquet(df, str(p))
-    return spark.read.parquet(str(p))
-
-
-def test_resize_images(spark, images_df):
-    out = multimodal.resize_images(images_df, 16, 16).toPandas()
-    assert len(out) == 60
-    assert (out["w"] == 16).all() and (out["h"] == 16).all()
-    r = out.iloc[0]
-    px = codecs.decode(bytes(r["bytes"]), 16, 16, r["fmt"])
-    assert px.shape == (16, 16)
-
-
-def test_image_features(spark, images_df):
-    out = multimodal.image_features(images_df).toPandas()
-    assert len(out) == 60
-    assert out["std_px"].gt(0).any()
-    assert out["phash"].nunique() > 30
-
-
-def test_video_frame_sampling(spark):
-    rng = np.random.default_rng(3)
-    vids = []
-    for i in range(4):
-        frames = rng.integers(0, 256, (30, 8, 8), dtype=np.uint8)
-        vids.append((f"vid{i}", multimodal.encode_rawframes(frames, fps=10), "rawframes"))
-    df = spark.createDataFrame(vids, "video_id string, bytes binary, container string")
-    out = multimodal.decode_video_frames(df, every_nth=10).toPandas()
-    assert len(out) == 4 * 3  # frames 0, 10, 20
-    assert set(out["frame_idx"]) == {0, 10, 20}
-    assert (out["ts_ms"] == out["frame_idx"] * 100).all()
-    # unsupported container raises with the missing dependency named
-    bad = spark.createDataFrame(
-        [("v", b"\x00" * 32, "mp4")], "video_id string, bytes binary, container string"
-    )
-    with pytest.raises(Exception, match="pyav|ffmpeg|NotImplemented"):
-        multimodal.decode_video_frames(bad).collect()
-
-
-def test_audio_segments(spark):
-    sr = 1000
-    tone = (np.sin(np.arange(3 * sr) * 0.3) * 10000).astype(np.int16)
-    df = spark.createDataFrame(
-        [("a0", multimodal.encode_pcm16(tone, sr), "pcm16")],
-        "audio_id string, bytes binary, codec string",
-    )
-    out = multimodal.audio_segment_features(df, segment_ms=1000).toPandas()
-    assert len(out) == 3
-    assert (out["rms"] > 1000).all()
-    assert (out["zero_crossings"] > 10).all()
 
 
 def test_ann_lsh_subset_of_bruteforce(spark):

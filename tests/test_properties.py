@@ -14,25 +14,9 @@ from mfdedup_spark.core.hashes import (
     byte_shingles,
     minhash_signature,
 )
-from mfdedup_spark.core.suffix_array import build_suffix_array, contains
 
 CFG = SignatureConfig()
 T = SignatureTables.get(CFG)
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.text(alphabet="abcxyz ", max_size=200), st.text(alphabet="abcxyz ", max_size=20))
-def test_suffix_array_contains_matches_python(host, needle):
-    assert contains(host, needle) == (needle in host)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.text(alphabet="abz", min_size=1, max_size=300))
-def test_suffix_array_is_sorted_permutation(s):
-    sa = build_suffix_array(s)
-    assert sorted(sa.tolist()) == list(range(len(s)))
-    suf = [s[i:] for i in sa]
-    assert suf == sorted(suf)
 
 
 @settings(max_examples=30, deadline=None)
