@@ -87,4 +87,3 @@ class EngineConfig:
     warehouse: str = "/tmp/mfdedup_spark_warehouse"
     retention: int = 2          # versions kept (build/config.toml:5)
     signature: SignatureConfig = field(default_factory=SignatureConfig)
-    arrow_batch_size: int = 2048

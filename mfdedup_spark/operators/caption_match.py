@@ -5,9 +5,9 @@ No reference analogue (the reference matches exact chunks only) —
 spec'd in SURVEY.md §2.6.
 
 Dataflow:
-1. Blocking — JVM-side: tokenize, build word k-grams with
-   ``transform(sequence(...))``, hash each gram with
-   ``conv(substring(md5(g),1,15),16,10)`` (identical to the oracle's
+1. Blocking — JVM-side: build word k-grams with ``textops.word_grams``,
+   hash each gram with ``textops.md5_long``
+   (``conv(substring(md5(g),1,15),16,10)``, identical to the oracle's
    ``core.hashes.gram_hash`` and DuckDB's hex-cast — portable), explode →
    (bucket, image_id). A caption that is a substring of another shares
    *all* of its word k-grams with the host, so any shared-gram bucket is a
@@ -48,23 +48,11 @@ def caption_gram_buckets(
     before the explode, so blocking keys reach the pair generator without
     a distinct or window exchange — at any m, bounded or not. Identical
     to the oracle's ``sorted(set(hashes))[:m]``."""
-    k = cfg.caption_gram_k
-    toks = F.split(F.col("caption"), " ")
-    n_grams = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(0), n_grams - F.lit(1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + F.lit(1), k)),
-    )
-    hashes = F.array_sort(
-        F.array_distinct(
-            F.transform(
-                grams,
-                lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast(
-                    "long"
-                ),
-            )
-        )
-    )
+    # function-local: textops imports substring_pairs from this module
+    from mfdedup_spark.textops import md5_long, word_grams
+
+    grams = word_grams(F.col("caption"), cfg.caption_gram_k)
+    hashes = F.array_sort(F.array_distinct(F.transform(grams, md5_long)))
     if max_grams_per_caption is not None:
         hashes = F.slice(hashes, 1, max_grams_per_caption)
     return images.select("image_id", F.explode(hashes).alias("bucket")).select(

@@ -175,6 +175,23 @@ def connected_components(
     return {i: find(i) for i in all_ids}
 
 
+def near_dup(
+    images: pd.DataFrame, cfg: SignatureConfig
+) -> tuple[pd.DataFrame, dict[str, str]]:
+    """The whole near-dup graph, the oracle twin of
+    plans/pipeline.dedup_images: signatures → LSH candidates → verify +
+    caption pairs → connected components. Returns (pairs, clusters)."""
+    sig = compute_signatures(images, cfg)
+    pairs = pd.concat(
+        [
+            verify_pairs(sig, candidate_pairs(sig, cfg), cfg),
+            caption_pairs(images, cfg),
+        ],
+        ignore_index=True,
+    )
+    return pairs, connected_components(pairs, images["image_id"].tolist())
+
+
 # ----------------------------------------------------------- NDF classification
 def classify_versions(images: pd.DataFrame) -> pd.DataFrame:
     """Reference NDF classification, exact semantics.

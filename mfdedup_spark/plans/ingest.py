@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from mfdedup_spark.config import EngineConfig
 from mfdedup_spark.functions.signatures import compute_signatures
 from mfdedup_spark.operators.classification import classify, version_metrics
+from mfdedup_spark.plans.pipeline import dedup_graph
 from mfdedup_spark.store import DedupStore
 
 
@@ -168,58 +169,21 @@ def ingest_version(
 
     if with_clusters:
         # the graft's near-dup cluster assignment for this version
-        # (north_star: recover category/volume assignment as clusters)
-        from mfdedup_spark.operators.caption_match import caption_pairs
-        from mfdedup_spark.operators.connected_components import (
-            connected_components,
-        )
-        from mfdedup_spark.operators.lsh import candidate_pairs
-        from mfdedup_spark.operators.verify import verify_pairs as _verify
-
-        # pin the shared level-1 intermediates: clusters consume the
-        # pairs and the drop-log write consumes the stats — the pin makes
-        # the explode + level-1 window run ONCE across both actions
-        # (VERDICT r04 wrong #2)
+        # (north_star: recover category/volume assignment as clusters):
+        # the same graph plan as dedup_images, over the signatures this
+        # ingest already persisted. The pin makes the explode + level-1
+        # window run ONCE across the clusters and drop-log writes
+        # (VERDICT r04 wrong #2); the persisted drop log makes a
+        # production ingest that overflowed hot buckets auditable
         pins: list = []
-        cand, lsh_stats = candidate_pairs(sig, cfg.signature, pin=pins)
-        pairs = _verify(cand, sig, cfg.signature)
-        cpairs, cap_stats = caption_pairs(images, cfg.signature, pin=pins)
-        edges = (
-            pairs.select("image_id_a", "image_id_b")
-            .unionByName(cpairs.select("image_id_a", "image_id_b"))
-            .distinct()
-        )
-        clusters = connected_components(edges, sig.select("image_id"))
+        graph = dedup_graph(images, sig, cfg.signature, pin=pins)
+        ver = F.lit(v).cast("int")
         store.write_partition(
-            clusters.withColumn("version", F.lit(v).cast("int")),
-            "clusters", "version", v,
+            graph["clusters"].withColumn("version", ver), "clusters", "version", v
         )
-        # north_rule mandates capped buckets WITH LOGGED DROPS — persist
-        # the overflow log per version so a production ingest that
-        # overflowed hot buckets is auditable (VERDICT r03 wrong #1; the
-        # stats agg is map-side-partial, a fraction of pair generation)
-        drop_log = (
-            lsh_stats.select(
-                "space",
-                F.col("band").cast("int").alias("band"),
-                F.col("bucket").cast("long").alias("bucket"),
-                F.col("members").cast("long").alias("members"),
-                F.col("kept").cast("long").alias("kept"),
-                F.col("dropped").cast("long").alias("dropped"),
-            )
-            .unionByName(
-                cap_stats.select(
-                    F.lit("caption").alias("space"),
-                    F.lit(0).cast("int").alias("band"),
-                    F.col("bucket").cast("long").alias("bucket"),
-                    F.col("members").cast("long").alias("members"),
-                    F.col("kept").cast("long").alias("kept"),
-                    F.col("dropped").cast("long").alias("dropped"),
-                )
-            )
-            .withColumn("version", F.lit(v).cast("int"))
+        store.write_partition(
+            graph["bucket_stats"].withColumn("version", ver), "drop_log", "version", v
         )
-        store.write_partition(drop_log, "drop_log", "version", v)
         for p in pins:
             p.unpersist()
         timer.mark("clusters")

@@ -1,4 +1,9 @@
-"""The flagship single-version dedup pipeline — SURVEY.md §7 step 2.
+"""The near-dup graph plan — SURVEY.md §7 step 2. This module is the
+only place the graph is wired: ``dedup_images`` runs it over one image
+table, and versioned ingest (``plans/ingest.ingest_version`` with
+``with_clusters``) runs the same ``dedup_graph`` over the signatures it
+already persisted, as MFDedup runs one dedup pipeline for every backup
+version (reference ``main.cpp:115-205``).
 
 Answers the reference's ``--task=write`` question — "which images are
 duplicates of which, and what is the dedup ratio"
@@ -18,7 +23,7 @@ as one Spark job:
                                 ▼
               connected components (iterative)    (shuffles 4..4+k)
                                 ▼
-                clusters + dedup metrics (agg)
+        clusters + drop log + dedup metrics (agg)
 """
 
 from __future__ import annotations
@@ -34,26 +39,25 @@ from mfdedup_spark.operators.lsh import candidate_pairs
 from mfdedup_spark.operators.verify import verify_pairs
 
 
-def dedup_images(
-    images: DataFrame, cfg: SignatureConfig | None = None, with_captions: bool = True
+def dedup_graph(
+    images: DataFrame,
+    sig: DataFrame,
+    cfg: SignatureConfig,
+    pin: list | None = None,
 ) -> dict[str, DataFrame]:
-    """Run the full near-dup pipeline; returns the intermediate and final
-    DataFrames: signatures, candidates, bucket_stats, pairs, clusters,
-    metrics."""
-    cfg = cfg or SignatureConfig()
-    sig = compute_signatures(images, cfg)
-    sig.persist()  # reused by candidate gen + verification joins
+    """The near-dup graph over already-computed signatures: salted LSH →
+    verify + caption match → connected components. Returns candidates,
+    bucket_stats (the drop log), pairs and clusters. Only
+    connected_components runs jobs here (its convergence rounds); the
+    rest stays lazy until the caller forces it.
 
-    cand, lsh_stats = candidate_pairs(sig, cfg)
-    verified = verify_pairs(cand, sig, cfg)
-    stats = lsh_stats
-    if with_captions:
-        cpairs, cap_stats = caption_pairs(images, cfg)
-        verified = verified.unionByName(cpairs)
-        stats = lsh_stats.select("members", "kept", "dropped").unionByName(
-            cap_stats.select("members", "kept", "dropped")
-        )
-    pairs = verified.dropDuplicates(["image_id_a", "image_id_b", "method"])
+    ``pin`` is passed through to the LSH and caption pair generators
+    (``lsh.capped_pairs``): a caller that materializes both the clusters
+    and the drop log passes a list so the shared level-1 intermediates
+    run once across both actions, then unpersists its frames."""
+    cand, lsh_stats = candidate_pairs(sig, cfg, pin=pin)
+    cpairs, cap_stats = caption_pairs(images, cfg, pin=pin)
+    verified = verify_pairs(cand, sig, cfg).unionByName(cpairs)
 
     # edges straight from verified (NOT via pairs): the per-method
     # dropDuplicates would add a second shuffle, and r06 drops the id-only
@@ -66,11 +70,45 @@ def dedup_images(
         sig.select("image_id"),
     )
 
+    # the drop log in the persisted ``drop_log`` schema: space ∈ {mh, sh,
+    # caption}, band int, bucket/members/kept/dropped long. North_rule
+    # mandates capped buckets WITH LOGGED DROPS (VERDICT r03 wrong #1); the
+    # stats agg is map-side-partial, a fraction of pair generation
+    counts = [
+        F.col(c).cast("long").alias(c)
+        for c in ("bucket", "members", "kept", "dropped")
+    ]
+    bucket_stats = lsh_stats.select(
+        "space", F.col("band").cast("int").alias("band"), *counts
+    ).unionByName(
+        cap_stats.select(
+            F.lit("caption").alias("space"), F.lit(0).alias("band"), *counts
+        )
+    )
+    return {
+        "candidates": cand,
+        "bucket_stats": bucket_stats,
+        "pairs": verified.dropDuplicates(["image_id_a", "image_id_b", "method"]),
+        "clusters": clusters,
+    }
+
+
+def dedup_images(
+    images: DataFrame, cfg: SignatureConfig | None = None
+) -> dict[str, DataFrame]:
+    """Run the full near-dup pipeline; returns the intermediate and final
+    DataFrames: signatures, candidates, bucket_stats, pairs, clusters,
+    metrics."""
+    cfg = cfg or SignatureConfig()
+    sig = compute_signatures(images, cfg)
+    sig.persist()  # reused by candidate gen + verification joins
+    graph = dedup_graph(images, sig, cfg)
+
     # dedup metrics — reference counters re-expressed as one aggregation
     # (DeduplicationPipeline.h:94-108): bytes kept = one representative per
     # cluster (the cluster anchor), exact-dup bytes = non-first sha1 copies
     sizes = sig.select("image_id", "length", "sha1")
-    with_cluster = sizes.join(clusters, "image_id")
+    with_cluster = sizes.join(graph["clusters"], "image_id")
     metrics = with_cluster.agg(
         F.count("*").alias("n_images"),
         F.sum("length").alias("total_len"),
@@ -80,14 +118,7 @@ def dedup_images(
         "cluster_dedup_ratio",
         F.col("n_images").cast("double") / F.col("n_clusters"),
     )
-    return {
-        "signatures": sig,
-        "candidates": cand,
-        "bucket_stats": stats,
-        "pairs": pairs,
-        "clusters": clusters,
-        "metrics": metrics,
-    }
+    return {"signatures": sig, **graph, "metrics": metrics}
 
 
 def load_images(spark: SparkSession, path: str) -> DataFrame:

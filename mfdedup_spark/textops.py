@@ -114,6 +114,13 @@ def band_bucket_sql(mh_exprs: list[str], band: int, rows: int = DOC_ROWS) -> str
 
 
 # ------------------------------------------------------------- operators
+def _doc_grams(docs: DataFrame) -> DataFrame:
+    """documents → (doc_id, g): one row per distinct word-gram hash."""
+    return docs.select(
+        "doc_id", F.explode(F.array_distinct(gram_hashes(F.col("text")))).alias("g")
+    )
+
+
 def doc_signatures(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, mh0..mh63) — JVM-side MinHash, no UDFs."""
     gh = gram_hashes(F.col("text")).alias("gh")
@@ -199,21 +206,7 @@ def doc_simhash_band_pairs_capped(
     back per side only for the surviving pairs."""
     from mfdedup_spark.operators.lsh import capped_pairs
 
-    sim = doc_simhash(docs)
-    bands = sim.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), b * 15).bitwiseAND(
-                        F.lit((1 << 15) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    bands = _doc_simhash_bands(docs)
     # r06: the 8-byte simhash rides the capped generator (carry=) so
     # verification needs no sa/sb join-backs — those re-evaluated the
     # whole SimHash aggregation subtree once per side (three evaluations
@@ -244,9 +237,7 @@ def doc_caption_substring_pairs_capped(
     the surviving candidates."""
     from mfdedup_spark.operators.lsh import capped_pairs
 
-    grams = docs.select(
-        "doc_id", F.explode(F.array_distinct(gram_hashes(F.col("text")))).alias("g")
-    )
+    grams = _doc_grams(docs)
     pairs, stats = capped_pairs(grams, cap, salt, key_cols=("g",), id_col="doc_id")
     return substring_pairs(pairs, docs, "doc_id", "text"), stats
 
@@ -416,10 +407,7 @@ def doc_simhash(docs: DataFrame) -> DataFrame:
     """60-bit SimHash over distinct word-gram hashes, pure JVM
     expressions: bit i set iff more grams have bit i than not. Portable to
     DuckDB verbatim (shift/and/sum/case)."""
-    grams = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(gram_hashes(F.col("text")))).alias("g"),
-    )
+    grams = _doc_grams(docs)
     votes = grams.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -434,6 +422,26 @@ def doc_simhash(docs: DataFrame) -> DataFrame:
         term = F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(0)
         sim = term if sim is None else sim + term
     return votes.select("doc_id", sim.alias("simhash"))
+
+
+def _doc_simhash_bands(docs: DataFrame) -> DataFrame:
+    """documents → (doc_id, simhash, band, bucket) over 4 × 15-bit simhash
+    bands; posexplode keeps the band index so buckets of different bands
+    don't mix."""
+    return doc_simhash(docs).select(
+        "doc_id",
+        "simhash",
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftright(F.col("simhash"), b * 15).bitwiseAND(
+                        F.lit((1 << 15) - 1)
+                    )
+                    for b in range(4)
+                ]
+            )
+        ).alias("band", "bucket"),
+    )
 
 
 def doc_simhash_sql() -> str:
@@ -459,22 +467,7 @@ def doc_simhash_band_pairs(docs: DataFrame, hamming_max: int = 8) -> DataFrame:
     """SimHash near-dup pairs: block on 4 × 15-bit simhash bands, verify
     hamming ≤ threshold with bit_count(xor) — the text twin of the image
     SimHash path."""
-    sim = doc_simhash(docs)
-    # posexplode keeps band index so buckets of different bands don't mix
-    bands = sim.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), b * 15).bitwiseAND(
-                        F.lit((1 << 15) - 1)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    bands = _doc_simhash_bands(docs)
     # r06: pair generation via one collect-per-bucket pass carrying
     # (doc_id, simhash) structs — the former bucket self-join evaluated
     # the whole SimHash aggregation subtree twice (once per side) and
@@ -515,9 +508,7 @@ def doc_caption_substring_pairs(docs: DataFrame) -> DataFrame:
     """Exact-substring containment pairs over shared-gram candidates —
     the uncapped, SQL-checkable twin of the image caption matcher (same
     verification, ``substring_pairs``)."""
-    grams = docs.select(
-        "doc_id", F.explode(F.array_distinct(gram_hashes(F.col("text")))).alias("g")
-    )
+    grams = _doc_grams(docs)
     # r06: shared-gram blocking through the one-pass collect generator —
     # the former self-join on g recomputed the exploded gram table for
     # both sides (two full md5-gram scans of documents)

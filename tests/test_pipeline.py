@@ -30,16 +30,6 @@ def results(spark, fixture_parquet):
     return pdf, truth, out
 
 
-def oracle_run(pdf):
-    sigs = oracle.compute_signatures(pdf, CFG)
-    cand = oracle.candidate_pairs(sigs, CFG)
-    pairs = oracle.verify_pairs(sigs, cand, CFG)
-    cpairs = oracle.caption_pairs(pdf, CFG)
-    allp = pd.concat([pairs, cpairs], ignore_index=True)
-    clusters = oracle.connected_components(allp, pdf["image_id"].tolist())
-    return sigs, allp, clusters
-
-
 def test_signature_parity(results):
     pdf, _, out = results
     got = out["signatures"].toPandas().sort_values("image_id").reset_index(drop=True)
@@ -60,7 +50,7 @@ def test_signature_parity(results):
 def test_pair_parity(results):
     """Engine pair set == oracle pair set (recall 1.0 ≥ required 0.99)."""
     pdf, _, out = results
-    _, want_pairs, _ = oracle_run(pdf)
+    want_pairs, _ = oracle.near_dup(pdf, CFG)
     got = {
         (a, b)
         for a, b in zip(
@@ -77,7 +67,7 @@ def test_pair_parity(results):
 
 def test_cluster_parity(results):
     pdf, _, out = results
-    _, _, want = oracle_run(pdf)
+    _, want = oracle.near_dup(pdf, CFG)
     got = dict(
         zip(*out["clusters"].select("image_id", "cluster_id").toPandas().T.values)
     )

@@ -541,6 +541,20 @@ def test_drop_log_persisted(spark, series, tmp_path_factory):
         assert r["kept"] == 4  # == cap on overflow rows
         assert r["space"] in ("mh", "sh", "caption")
 
+    # dedup_images wires the same graph: over the same parquet and config
+    # its drop log is the persisted one, and its clusters are too
+    from mfdedup_spark.plans.pipeline import dedup_images
+
+    out = dedup_images(spark.read.parquet(p), cfg.signature)
+    assert sorted(out["bucket_stats"].collect()) == sorted(
+        log.drop("version").collect()
+    )
+    persisted = store.read_partitions("clusters", "version", [1])
+    assert sorted(out["clusters"].select("image_id", "cluster_id").collect()) == (
+        sorted(persisted.select("image_id", "cluster_id").collect())
+    )
+    out["signatures"].unpersist()
+
 
 def test_staged_swap_roll_forward(spark, series, tmp_path_factory):
     """The staged archive swap's own crash window (ADVICE r03 medium):
@@ -656,14 +670,7 @@ def test_ingest_with_clusters(spark, series, tmp_path_factory):
         .select("image_id", "cluster_id")
         .toPandas()
     )
-    v1 = pdf[pdf["version"] == 1]
-    sigs = oracle.compute_signatures(v1, CFG.signature)
-    cand = oracle.candidate_pairs(sigs, CFG.signature)
-    pairs = oracle.verify_pairs(sigs, cand, CFG.signature)
-    cpairs = oracle.caption_pairs(v1, CFG.signature)
-    import pandas as _pd
-    allp = _pd.concat([pairs, cpairs], ignore_index=True)
-    want = oracle.connected_components(allp, v1["image_id"].tolist())
+    _, want = oracle.near_dup(pdf[pdf["version"] == 1], CFG.signature)
     assert dict(zip(got["image_id"], got["cluster_id"])) == want
 
 

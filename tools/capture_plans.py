@@ -1,8 +1,18 @@
-"""Capture physical plans for the engine's key operators → docs/PLANS.md.
+"""Capture physical plans (``.explain("formatted")``).
 
-Run after operator changes; the judge-facing evidence that filters reach
-scans, small sides broadcast, and the hot path stays in whole-stage
-codegen.
+  python tools/capture_plans.py                  # → docs/PLANS.md
+  python tools/capture_plans.py TAG [QUERY ...]  # → plans/TAG/QUERY.txt
+
+With no arguments, writes the key-operator plans to docs/PLANS.md: the
+evidence that filters reach scans, small sides broadcast, and the hot
+path stays in whole-stage codegen. Run it after operator changes.
+
+Given a tag, writes one plan per query to plans/TAG/QUERY.txt, for
+before/after plan diffs (e.g. tags ``r07_before`` and ``r07_after``).
+QUERY is one of the six bench.py queries (the default: all six) or any
+contract query name. This mode runs at $SPARK_GRAFT_SF_DIR (default
+sf0.1) with the bench session shape, so plans match what bench.py
+executes.
 """
 
 from __future__ import annotations
@@ -18,6 +28,12 @@ from mfdedup_spark.config import SignatureConfig
 from mfdedup_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
+BENCH_SF = os.path.join(os.path.dirname(SF), "sf0.1")  # bench.py's default
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+HEADLINERS = [
+    "image_dedup", "doc_cluster", "ndf_classify",
+    "restore_prefix", "ngram_jaccard", "ann_topk",
+]
 
 
 def explain_str(df) -> str:
@@ -27,7 +43,50 @@ def explain_str(df) -> str:
     return buf.getvalue()
 
 
-def main() -> None:
+def capture_queries(tag: str, wanted: list[str]) -> None:
+    """Write plans/<tag>/<query>.txt for each wanted query."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", BENCH_SF)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+    from bench import ensure_image_fixture, _sf_from_dir
+    from mfdedup_spark import contract
+    from mfdedup_spark.plans.pipeline import dedup_images
+
+    spark = get_spark(
+        app="capture-plans", master=f"local[{cpus}]",
+        shuffle_partitions=max(cpus, 8),
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    n_images = max(200, int(80_000 * _sf_from_dir(sf_dir)))
+    outdir = os.path.join(ROOT, "plans", tag)
+    os.makedirs(outdir, exist_ok=True)
+
+    def build(name: str):
+        if name == "image_dedup":
+            images = spark.read.parquet(
+                ensure_image_fixture(n_images)).repartition(cpus)
+            return dedup_images(images, SignatureConfig())["clusters"]
+        if name == "doc_cluster":
+            return contract.flagship(spark, sf_dir)
+        if name == "ndf_classify":
+            return contract.q_ndf_classification_events(spark, sf_dir)
+        if name == "restore_prefix":
+            return contract.q_restore_prefix_sum(spark, sf_dir)
+        if name == "ngram_jaccard":
+            return contract.q_ngram_jaccard_docs(spark, sf_dir)
+        if name == "ann_topk":
+            return contract.q_ann_cosine_topk(spark, sf_dir)
+        return contract.QUERIES[name](spark, sf_dir)
+
+    for name in wanted:
+        path = os.path.join(outdir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(explain_str(build(name)))
+        print(f"wrote {path}")
+
+
+def capture_operators() -> None:
+    """Write the key-operator plans to docs/PLANS.md."""
     spark = get_spark(master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     cfg = SignatureConfig()
@@ -112,8 +171,8 @@ def main() -> None:
         explain_str(ivf_lists_joined(emb, cent)),
     ))
 
-    os.makedirs("docs", exist_ok=True)
-    with open("docs/PLANS.md", "w") as f:
+    os.makedirs(os.path.join(ROOT, "docs"), exist_ok=True)
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans — key operators\n\n"
             "Captured by tools/capture_plans.py (sf0.01 inputs, local[4]).\n"
@@ -121,6 +180,13 @@ def main() -> None:
         for title, note, plan in sections:
             f.write(f"\n## {title}\n\n{note}\n\n```\n{plan}```\n")
     print("wrote docs/PLANS.md")
+
+
+def main() -> None:
+    if len(sys.argv) > 1:
+        capture_queries(sys.argv[1], sys.argv[2:] or HEADLINERS)
+    else:
+        capture_operators()
 
 
 if __name__ == "__main__":
